@@ -11,9 +11,10 @@ import org.apache.spark.sql.SparkSession
  * are shuffle sizing and adaptive execution, chosen for a cluster but
  * exercised on `local[N]`:
  *
- *  - `spark.sql.shuffle.partitions` defaults to the local core count
- *    (32 in this harness) rather than 200 — at 100 TB this would be
- *    raised, but AQE coalesces post-shuffle partitions either way.
+ *  - `local[N]` with N = `SPARK_GRAFT_CPUS` (the deployment setting)
+ *    or every core of the box, and `spark.sql.shuffle.partitions` = N
+ *    rather than 200 — at 100 TB this would be raised, but AQE
+ *    coalesces post-shuffle partitions either way.
  *  - AQE on: runtime re-planning handles skewed joins and picks
  *    broadcast joins from runtime stats — important for the skewed
  *    key distributions a 1000-executor job meets.
@@ -21,19 +22,23 @@ import org.apache.spark.sql.SparkSession
  *    which vanilla Spark refuses; we read ns as long and convert to
  *    microsecond timestamps at the source boundary (see
  *    [[graft.sources.Tables.events]]).
+ *
+ * Every main (Verify, Bench, Smoke, RunAll, the tools) builds its
+ * session here.
  */
 object GraftSession {
 
-  def builder(
-      appName: String = "graft",
-      master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
-      shufflePartitions: Int = 32): SparkSession.Builder =
+  /** Local core count: `SPARK_GRAFT_CPUS`, else every core of the box. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
+  def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
       .withExtensions(new GraftExtensions)
       .appName(appName)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -45,15 +50,6 @@ object GraftSession {
     val spark = builder(appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.util.Metrics.enableLogging(spark)
-    spark
-  }
-
-  /** Apply the engine's runtime confs to an externally-created session
-    * (the driver harness builds its own in Verify/Bench). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark
   }
 }

@@ -5,7 +5,7 @@ import graft.io.Sinks
 import graft.leaderboards.{Kernel, Leaderboards}
 import graft.metrics.{ExpectedRuns, Guts, GutsConstants, LinearWeights, PbpMetrics}
 import graft.war.{GetWar, SchemaFinalize}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -104,25 +104,28 @@ object RunAll {
     // this run returns — caller-owned caches stay untouched (ADVICE r3)
 
     val results = scala.collection.mutable.ArrayBuffer.empty[StageResult]
-    def write(df: DataFrame, name: String): DataFrame = {
+    // the one sink: every output is written once, and its `rows` (this
+    // batch's, not an upserted table's history) are observed on that
+    // write instead of read back.
+    // `upsert` outputs are stamped and overwrite only their (year,
+    // division) partition. An empty upsert replaces no partition and
+    // records no stage, as the reference skips empty tables
+    // (main.py:159); the directories its write created are removed
+    def sink(df: DataFrame, name: String, upsert: Boolean = false): String = {
       val path = s"$outDir/$name"
-      df.write.mode("overwrite").parquet(path)
-      val back = spark.read.parquet(path)
-      results += StageResult(name, path, back.count())
-      back
-    }
-    def upsert(df: DataFrame, name: String): Unit = {
-      val path = s"$outDir/$name"
-      val stamped = df
-        .withColumn("year", lit(inputs.year))
-        .withColumn("division", lit(inputs.division))
-      Sinks.upsertByPartition(stamped, path, Seq("year", "division"))
-      // report THIS batch's rows (partition-pruned read), consistent
-      // with write()'s semantics — not the whole history
-      results += StageResult(name, path,
-        spark.read.parquet(path)
-          .filter(col("year") === inputs.year && col("division") === inputs.division)
-          .count())
+      val dir = new org.apache.hadoop.fs.Path(path)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val created = Iterator.iterate(dir)(_.getParent).takeWhile(!fs.exists(_)).toSeq.lastOption
+      val observed = Observation()
+      val counted = df.observe(observed, count(lit(1)).as("rows"))
+      if (upsert) Sinks.upsertByPartition(
+        counted.withColumn("year", lit(inputs.year)).withColumn("division", lit(inputs.division)),
+        path, Seq("year", "division"))
+      else counted.write.mode("overwrite").parquet(path)
+      val rows = observed.get("rows").asInstanceOf[Long]
+      if (rows > 0 || !upsert) results += StageResult(name, path, rows)
+      else created.foreach(fs.delete(_, true))
+      path
     }
 
     // 1. parse (pbp_parser stage) + team enrichment
@@ -155,10 +158,10 @@ object RunAll {
           .withColumn("r2_id", when(col("r2_name") =!= "", col("r2_name")))
           .withColumn("r3_id", when(col("r3_name") =!= "", col("r3_name")))
     }
-    val parsed = write(parsed2, "parsed_pbp")
+    val parsed = spark.read.parquet(sink(parsed2, "parsed_pbp"))
 
     // 2. expected runs (get_er_matrix stage)
-    val er = write(ExpectedRuns.matrix(parsed), "expected_runs")
+    val er = spark.read.parquet(sink(ExpectedRuns.matrix(parsed), "expected_runs"))
 
     // 3. linear weights (get_linear_weights stage). With season batting
     // stats the weights normalize to the true wOBA scale (league OBP /
@@ -168,10 +171,10 @@ object RunAll {
     val lw0 = LinearWeights.aboveAverage(parsed, er)
     val lwNormalized = inputs.battingStats match {
       case Some(bat) =>
-        write(LinearWeights.normalized(lw0, bat), "linear_weights")
+        spark.read.parquet(sink(LinearWeights.normalized(lw0, bat), "linear_weights"))
           .select("events", "normalized_weight")
       case None =>
-        write(lw0, "linear_weights")
+        spark.read.parquet(sink(lw0, "linear_weights"))
           .select(col("events"),
             col("linear_weights_above_outs").as("normalized_weight"))
     }
@@ -195,14 +198,14 @@ object RunAll {
         .withColumn("batter_hand", lit(null).cast("string"))
         .withColumn("pitcher_hand", lit(null).cast("string"))
     }
-    val metrics = write(enriched1, "pbp_with_metrics")
+    val metrics = spark.read.parquet(sink(enriched1, "pbp_with_metrics"))
 
     // 5. guts (get_guts stage) — needs season stats for wOBA/FIP
     val guts = (inputs.battingStats, inputs.pitchingStats) match {
       case (Some(bat), Some(pit)) =>
         val g = Guts.compute(metrics, lwNormalized, bat, pit, inputs.year, inputs.division)
         import spark.implicits._
-        write(Seq(g).toDF(), "guts_constants")
+        sink(Seq(g).toDF(), "guts_constants")
         g
       case _ => defaultGuts(inputs.year, inputs.division)
     }
@@ -229,12 +232,12 @@ object RunAll {
       // per-(year, division) partitions, like the reference's
       // war/{prefix}_*_{year}.csv file-per-slice layout — repeated
       // division-year runs accumulate instead of clobbering
-      upsert(SchemaFinalize.finalizeSchema(war.batting, SchemaFinalize.battingWar),
-        "batting_war")
-      upsert(SchemaFinalize.finalizeSchema(war.pitching, SchemaFinalize.pitchingWar),
-        "pitching_war")
-      upsert(war.battingTeam, "batting_team_war")
-      upsert(war.pitchingTeam, "pitching_team_war")
+      sink(SchemaFinalize.finalizeSchema(war.batting, SchemaFinalize.battingWar),
+        "batting_war", upsert = true)
+      sink(SchemaFinalize.finalizeSchema(war.pitching, SchemaFinalize.pitchingWar),
+        "pitching_war", upsert = true)
+      sink(war.battingTeam, "batting_team_war", upsert = true)
+      sink(war.pitchingTeam, "pitching_team_war", upsert = true)
     }
 
     // 7. leaderboards (leaderboards stage): the ~20-table fan-out off
@@ -255,18 +258,11 @@ object RunAll {
         // pass under the (year, division) upsert
         val df = Leaderboards.publish(name, df0, inputs.teamHistory,
           inputs.division, inputs.year)
-        // empty tables are skipped, as the reference does (main.py:159)
-        if (!df.isEmpty) upsert(df, s"leaderboards/$name")
+        sink(df, s"leaderboards/$name", upsert = true)
       }
     }
     results.toSeq
   }
-
-  /** Back-compat entry (round-2 call shape). */
-  def run(
-      spark: SparkSession, rawPbp: DataFrame, outDir: String,
-      weTable: Option[DataFrame], liTable: Option[DataFrame]): Seq[StageResult] =
-    run(spark, rawPbp, outDir, Inputs(weTable = weTable, liTable = liTable))
 
   /** The reference's outer loop (`run_all.py:61-154`, years ×
     * divisions): each slice runs the full DAG into the SAME output

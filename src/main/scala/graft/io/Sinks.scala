@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
  */
 object Sinks {
 
-  /** S8: overwrite only the partitions present in `df`. */
+  /** S8: overwrite only the partitions present in `df`. The dynamic
+    * mode is a writer option, so the caller's session keeps its own. */
   def upsertByPartition(df: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df.write
       .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCols: _*)
       .parquet(path)
   }

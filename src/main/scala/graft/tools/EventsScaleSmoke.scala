@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.operators.{AsOfJoin, Sessionize, StatefulFold}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Row}
@@ -50,7 +51,7 @@ object EventsScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-events-scale-smoke")
+    val spark = GraftSession.get("graft-events-scale-smoke")
     val tally = new LlmScaleSmoke.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 

@@ -1,4 +1,5 @@
 package graft.tools
+import graft.GraftSession
 import graft.queries.QPbp
 /** Regenerates resources/graft/pbp02_oracle.sql from the current
   * parser — run after INTENTIONAL parser-semantics changes. */
@@ -6,7 +7,7 @@ object GenPbp02Oracle {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/main/resources/graft/pbp02_oracle.sql")
-    val spark = ToolSession.local("gen-pbp02-oracle")
+    val spark = GraftSession.get("gen-pbp02-oracle")
     val rows = QPbp.parseSummary(spark, dir).collect()
     val values = rows.map { r =>
       val et = r.getString(0).replace("'", "''")

@@ -1,4 +1,5 @@
 package graft.tools
+import graft.GraftSession
 import graft.queries.QPbp
 /** Regenerates resources/graft/pbp03_oracle.sql (the pinned X2
   * pitcher-queue + standardize_names summary) from the current
@@ -7,7 +8,7 @@ object GenPbp03Oracle {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("src/main/resources/graft/pbp03_oracle.sql")
-    val spark = ToolSession.local("gen-pbp03-oracle")
+    val spark = GraftSession.get("gen-pbp03-oracle")
     val rows = QPbp.pitcherStandardizeSummary(spark, dir).collect()
     val values = rows.map { r =>
       val pn = r.getString(0).replace("'", "''")

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.operators.{BpeTrain, Decontaminate, Dedup, Packing, PageRank, SubstringDedup, TextSearch, Winnowing}
 import graft.sources.Tables
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -78,7 +79,7 @@ object LlmScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scales = args.lift(1).getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-llm-scale-smoke")
+    val spark = GraftSession.get("graft-llm-scale-smoke")
     val tally = new ShuffleTally
     spark.sparkContext.addSparkListener(tally)
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.multimodal.{MediaRow, Multimodal, Subtitles}
 import graft.queries.QMedia
 import org.apache.spark.sql.Dataset
@@ -27,7 +28,7 @@ object MediaScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val scales = args.headOption.getOrElse("1,3,10").split(',').map(_.trim.toInt).toSeq
-    val spark = ToolSession.local("graft-media-scale-smoke")
+    val spark = GraftSession.get("graft-media-scale-smoke")
     import spark.implicits._
     val tally = new LlmScaleSmoke.ShuffleTally
     spark.sparkContext.addSparkListener(tally)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `explain("formatted")` for registered queries to files —
@@ -17,7 +18,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = ToolSession.local("graft-plan-dump")
+    val spark = GraftSession.get("graft-plan-dump")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.SparkEntry
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import scala.collection.mutable.ArrayBuffer
@@ -12,7 +13,7 @@ object StageAudit {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = ToolSession.local("graft-stage-audit")
+    val spark = GraftSession.get("graft-stage-audit")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     spark.catalog.clearCache()
 

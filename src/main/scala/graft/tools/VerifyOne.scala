@@ -1,4 +1,5 @@
 package graft.tools
+import graft.GraftSession
 import graft.SparkEntry
 /** Single-query Verify: writes outDir/<name> parquet so
   * `tools/localverify.py <sf> <out> <name>` can compare one query
@@ -8,7 +9,7 @@ object VerifyOne {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(2).getOrElse("/tmp/graft_verify")
-    val spark = ToolSession.local("graft-verify-one")
+    val spark = GraftSession.get("graft-verify-one")
     SparkEntry.queries(name)(spark, sfDir).coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/$name")
     // drop operator-persisted intermediates (pbp parsed caches etc.) so

@@ -60,7 +60,7 @@ class RunAllSpec extends AnyFunSuite {
       .toDF("inning", "half", "runners", "outs", "score_diff", "leverage_index")
 
     val outDir = s"/tmp/graft_runall_weli_${System.nanoTime()}"
-    RunAll.run(spark, raw, outDir, weTable = Some(we), liTable = Some(li))
+    RunAll.run(spark, raw, outDir, RunAll.Inputs(weTable = Some(we), liTable = Some(li)))
     val m = spark.read.parquet(s"$outDir/pbp_with_metrics")
     assert(m.columns.contains("wpa") && m.columns.contains("li")
       && m.columns.contains("times_through_order"))
@@ -262,20 +262,46 @@ class RunAllSpec extends AnyFunSuite {
 
   test("runMany accumulates (year, division) slices; leaderboards keep history") {
     val outDir = s"/tmp/graft_runall_many_${System.nanoTime()}"
-    RunAll.runMany(spark, Seq(
-      (rawGame, RunAll.Inputs(division = "ncaa_1", year = 2023)),
-      (rawGame, RunAll.Inputs(division = "ncaa_1", year = 2024)),
-      (rawGame, RunAll.Inputs(division = "ncaa_2", year = 2024))), outDir)
+    val keys = Seq((2023, "ncaa_1"), (2024, "ncaa_1"), (2024, "ncaa_2"))
+    val stages = RunAll.runMany(spark,
+      keys.map { case (y, d) => (rawGame, RunAll.Inputs(division = d, year = y)) }, outDir)
     val sit = spark.read.parquet(s"$outDir/leaderboards/situational_batter")
     val slices = sit.select("year", "division").distinct()
       .collect().map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(slices === Set((2023, "ncaa_1"), (2024, "ncaa_1"), (2024, "ncaa_2")))
+    assert(slices === keys.toSet)
+    // each slice reports the rows of its own (year, division) partition
+    val sitRows = stages.filter(_.name == "leaderboards/situational_batter").map(_.rows)
+    assert(sitRows === keys.map { case (y, d) =>
+      sit.filter(col("year") === y && col("division") === d).count() })
     // re-running one slice overwrites ONLY that partition
     val before = sit.filter(col("year") === 2023).count()
     RunAll.run(spark, rawGame, outDir, RunAll.Inputs(division = "ncaa_1", year = 2023))
     val after = spark.read.parquet(s"$outDir/leaderboards/situational_batter")
     assert(after.filter(col("year") === 2023).count() === before)
     assert(after.select("year", "division").distinct().count() === 3)
+  }
+
+  test("boards emptied at publish record no stage and leave no directory") {
+    val teams = Seq((1L, "T1", "T2", "Aardvarks", "Badgers"),
+      (2L, "T3", "T2", "Cougars", "Badgers"))
+      .toDF("contest_id", "away_team_id", "home_team_id", "away_team_name", "home_team_name")
+    // every fixture team is in the history, but only under another
+    // division: the publish filter keeps no row of a team-keyed board
+    val teamHistory = Seq("T1", "T2", "T3").map(t => (t, "ncaa_2", 2024, t, "North"))
+      .toDF("team_id", "division", "year", "team_name", "conference")
+    val outDir = s"/tmp/graft_runall_empty_${System.nanoTime()}"
+    val stages = RunAll.run(spark, rawGame, outDir, RunAll.Inputs(
+      teams = Some(teams), teamHistory = Some(teamHistory), division = "ncaa_1", year = 2024))
+    val names = stages.map(_.name).toSet
+    // publish empties every team-keyed board (the pitcher and rolling
+    // boards are empty on this fixture anyway): none is recorded and
+    // no leaderboards directory is left behind
+    assert(!names.exists(_.startsWith("leaderboards/")), names)
+    assert(!new java.io.File(s"$outDir/leaderboards").exists())
+    // the stage outputs are written regardless
+    Seq("parsed_pbp", "expected_runs", "linear_weights", "pbp_with_metrics").foreach { n =>
+      assert(names.contains(n) && new java.io.File(s"$outDir/$n").isDirectory, s"missing $n")
+    }
   }
 
   test("SchemaFinalize: defaults, nullable ints, non-finite scrub, ordered select") {

@@ -34,6 +34,18 @@ class SinksSpec extends AnyFunSuite {
     assert(got === Set(("a", 2023, 9.0), ("c", 2024, 3.0)))
   }
 
+  test("upsertByPartition replaces only the written partition and leaves the session mode alone") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_").toString
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(mode)
+    Seq((1, "a", 1.0), (2, "a", 2.0), (3, "b", 3.0)).toDF("id", "part", "v")
+      .write.mode("overwrite").partitionBy("part").parquet(dir)
+    Sinks.upsertByPartition(Seq((4, "a", 4.0)).toDF("id", "part", "v"), dir, Seq("part"))
+    val got = spark.read.parquet(dir).select("id", "part").as[(Int, String)].collect().toSet
+    assert(got === Set((4, "a"), (3, "b")))
+    assert(spark.conf.getOption(mode) === before)
+  }
+
   test("malformed CSV rows are captured, not silently dropped (PERMISSIVE + corrupt-record)") {
     import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("graft_badcsv_").toString
